@@ -412,7 +412,6 @@ def _q_sssp_weighted(spark, sf):
         weight_col="w",
         vertices=document_vertices(spark, sf),
         max_supersteps=4 * WSSSP_STEPS,
-        track_messages=False,
     )
     if not res.converged or res.supersteps > WSSSP_STEPS:
         raise RuntimeError(
@@ -438,7 +437,6 @@ def _q_temporal_reachability(spark, sf):
         source=0,
         vertices=document_vertices(spark, sf),
         max_supersteps=4 * TEMPORAL_STEPS,
-        track_messages=False,
     )
     if not res.converged or res.supersteps > TEMPORAL_STEPS:
         raise RuntimeError(
@@ -464,7 +462,6 @@ def _q_temporal_departure(spark, sf):
         deadline=96,
         vertices=document_vertices(spark, sf),
         max_supersteps=4 * TEMPORAL_STEPS,
-        track_messages=False,
     )
     if not res.converged or res.supersteps > TEMPORAL_STEPS:
         raise RuntimeError(
@@ -584,7 +581,6 @@ def _q_hits(spark, sf):
         edges,
         iterations=HITS_ITERS,
         vertices=document_vertices(spark, sf),
-        track_messages=False,
     )
     return scores.select(
         "id",
@@ -604,7 +600,6 @@ def _q_kcore(spark, sf):
         edges,
         KCORE_K,
         vertices=document_vertices(spark, sf),
-        track_messages=False,
     )
     # the unrolled oracle peels KCORE_PASSES times; a deeper cascade
     # would make it silently under-peel — fail LOUDLY instead (one
@@ -2744,12 +2739,8 @@ def _q_incremental_cc(spark, sf):
     )
     new = kept.unionByName(flipped)
     verts = document_vertices(spark, sf)
-    old_labels, _ = connected_components(
-        old, vertices=verts, track_messages=False
-    )
-    labels, _ = incremental_cc(
-        new, old, old_labels, vertices=verts, track_messages=False
-    )
+    old_labels, _ = connected_components(old, vertices=verts)
+    labels, _ = incremental_cc(new, old, old_labels, vertices=verts)
     return labels
 
 
@@ -2796,6 +2787,7 @@ def _q_maintained_stream(spark, sf):
     that two folds committed and that the incrementally maintained
     state equals the from-scratch answer."""
     import os
+    import shutil
     import tempfile
 
     from linkgraph.streaming import (
@@ -2804,24 +2796,27 @@ def _q_maintained_stream(spark, sf):
     )
 
     base = tempfile.mkdtemp(prefix="mstream_gate_")
-    ingest = os.path.join(base, "ingest")
-    os.makedirs(ingest)
-    state = os.path.join(base, "state")
-    ck = os.path.join(base, "ck")
-    edges = document_edges(spark, sf)
-    key = (F.col("src") + F.col("dst")) % 3
-    edges.filter(key != 0).coalesce(1).write.parquet(os.path.join(ingest, "b1"))
-    maintained_graph_stream(spark, ingest + "/*", state, ck)
-    edges.filter(key == 0).coalesce(1).write.parquet(os.path.join(ingest, "b2"))
-    maintained_graph_stream(spark, ingest + "/*", state, ck)
-    _, labels, tri, epoch = read_maintained_state(spark, state)
-    return labels.select(
-        "id",
-        "component",
-        F.lit(int(tri)).cast("long").alias("total_triangles"),
-        F.lit(int(epoch)).cast("long").alias("epoch"),
-    )
-
+    try:
+        ingest = os.path.join(base, "ingest")
+        os.makedirs(ingest)
+        state = os.path.join(base, "state")
+        ck = os.path.join(base, "ck")
+        edges = document_edges(spark, sf)
+        key = (F.col("src") + F.col("dst")) % 3
+        edges.filter(key != 0).coalesce(1).write.parquet(os.path.join(ingest, "b1"))
+        maintained_graph_stream(spark, ingest + "/*", state, ck)
+        edges.filter(key == 0).coalesce(1).write.parquet(os.path.join(ingest, "b2"))
+        maintained_graph_stream(spark, ingest + "/*", state, ck)
+        _, labels, tri, epoch = read_maintained_state(spark, state)
+        # materialized before the state tree it reads is removed below
+        return labels.select(
+            "id",
+            "component",
+            F.lit(int(tri)).cast("long").alias("total_triangles"),
+            F.lit(int(epoch)).cast("long").alias("epoch"),
+        ).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
 
 def _q_cut_duplicate_spans(spark, sf):
     """The substring-dedup CUT (dedup.py cut_duplicate_spans): the
@@ -2849,7 +2844,6 @@ def _q_component_renumber(spark, sf):
     labels, _ = connected_components(
         document_edges(spark, sf),
         vertices=document_vertices(spark, sf),
-        track_messages=False,
     )
     return renumber_by_label(labels)
 

@@ -50,7 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointManager
-from ..graph import choose_partitions, vertices_from_edges
+from ..graph import loop_vertices
 from ..partitioning import symmetrize
 from ..phash import md5_digits_spark_sql as _md5_digits_spark_sql
 from ..phash import md5_int_sql as _md5_int_sql
@@ -115,17 +115,15 @@ def greedy_coloring(
     Deterministic in (graph, seed); both coin modes yield a valid
     coloring but generally DIFFERENT ones. Isolated vertices color 0.
     """
-    p = choose_partitions(edges, lambda: edges.count(), num_partitions)
-    if vertices is None:
-        vertices = vertices_from_edges(edges)
+    p, verts = loop_vertices(
+        edges, vertices, num_partitions, symmetrize_edges=True
+    )
 
     with iteration_conf(edges.sparkSession, p):
         sym = symmetrize(edges).repartition(p, "src").persist()
         sym.count()
 
-    init = vertices.select("id").withColumn(
-        "color", F.lit(UNCOLORED).cast("int")
-    ).repartition(p, "id")
+    init = verts.withColumn("color", F.lit(UNCOLORED).cast("int"))
 
     def superstep(state: DataFrame, k: int) -> StepResult:
         # ONE gather join + ONE combine per superstep (the engine's
@@ -177,7 +175,6 @@ def greedy_coloring(
         max_supersteps=max_supersteps,
         ckpt=ckpt,
         resume=resume,
-        track_messages=True,
         num_partitions=p,
     )
     sym.unpersist()

@@ -28,9 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointManager
-from ..graph import choose_partitions, vertices_from_edges
-from ..partitioning import build_adjacency
-from ..superstep import LoopResult, StepResult, iterate, iteration_conf
+from ..graph import loop_graph
+from ..superstep import LoopResult, StepResult, iterate
 
 
 def eigenvector_centrality(
@@ -38,7 +37,6 @@ def eigenvector_centrality(
     updates: int = 6,
     vertices: DataFrame | None = None,
     num_partitions: int | None = None,
-    chunk_size: int = 4096,
     ckpt: CheckpointManager | None = None,
     resume: bool = True,
 ) -> tuple[DataFrame, LoopResult]:
@@ -66,41 +64,32 @@ def eigenvector_centrality(
     Returns (DF(id, walks BIGINT, eig DOUBLE), LoopResult); ``eig`` is
     NULL when the graph has no walks of the final length (max = 0).
     """
-    p = choose_partitions(edges, lambda: edges.count(), num_partitions)
-    if vertices is None:
-        vertices = vertices_from_edges(edges)
-    verts = vertices.select("id").repartition(p, "id")
+    with loop_graph(edges, vertices, num_partitions) as (p, verts, _, adj):
+        init = verts.withColumn("walks", F.lit(1).cast("long"))
 
-    with iteration_conf(edges.sparkSession, p):
-        adj = build_adjacency(edges, num_partitions=p, chunk_size=chunk_size).persist()
-        adj.count()
+        def superstep(state: DataFrame, k: int) -> StepResult:
+            msgs = (
+                adj.join(state, F.expr("src = id"))
+                .selectExpr("explode(dsts) AS id", "walks AS w")
+                .groupBy("id")
+                .agg(F.expr("CAST(SUM(w) AS BIGINT) AS msum"))
+            )
+            new = state.join(msgs, "id", "left_outer").selectExpr(
+                "id",
+                "COALESCE(msum, CAST(0 AS BIGINT)) AS walks",
+                "CAST(msum IS NOT NULL AS BIGINT) AS _msgs",
+            )
+            return StepResult(state=new, messages=msgs)
 
-    init = verts.withColumn("walks", F.lit(1).cast("long"))
-
-    def superstep(state: DataFrame, k: int) -> StepResult:
-        msgs = (
-            adj.join(state, F.expr("src = id"))
-            .selectExpr("explode(dsts) AS id", "walks AS w")
-            .groupBy("id")
-            .agg(F.expr("CAST(SUM(w) AS BIGINT) AS msum"))
+        result = iterate(
+            init,
+            superstep,
+            converged=lambda stats: False,
+            max_supersteps=updates,
+            ckpt=ckpt,
+            resume=resume,
+            num_partitions=p,
         )
-        new = state.join(msgs, "id", "left_outer").selectExpr(
-            "id",
-            "COALESCE(msum, CAST(0 AS BIGINT)) AS walks",
-            "CAST(msum IS NOT NULL AS BIGINT) AS _msgs",
-        )
-        return StepResult(state=new, messages=msgs)
-
-    result = iterate(
-        init,
-        superstep,
-        converged=lambda stats: False,
-        max_supersteps=updates,
-        ckpt=ckpt,
-        resume=resume,
-        track_messages=False,
-        num_partitions=p,
-    )
     mx = result.state.agg(F.max("walks").alias("_mx"))
     out = result.state.select("id", "walks").crossJoin(F.broadcast(mx)).select(
         "id",
@@ -111,7 +100,6 @@ def eigenvector_centrality(
         )
         .alias("eig"),
     )
-    adj.unpersist()
     return out, result
 
 
@@ -124,10 +112,8 @@ def katz_centrality(
     fixed_updates: int | None = None,
     vertices: DataFrame | None = None,
     num_partitions: int | None = None,
-    chunk_size: int = 4096,
     ckpt: CheckpointManager | None = None,
     resume: bool = True,
-    track_messages: bool = True,
 ) -> tuple[DataFrame, LoopResult]:
     """Returns (DF(id, katz), LoopResult).
 
@@ -139,55 +125,45 @@ def katz_centrality(
     distributions; at alpha >= 1/lambda_max the loop stops on
     max_supersteps with diverging values, as the series itself does).
     """
-    p = choose_partitions(edges, lambda: edges.count(), num_partitions)
-    if vertices is None:
-        vertices = vertices_from_edges(edges)
-    verts = vertices.select("id").repartition(p, "id")
+    with loop_graph(edges, vertices, num_partitions) as (p, verts, _, adj):
+        init = verts.withColumn("katz", F.lit(float(beta)))
 
-    with iteration_conf(edges.sparkSession, p):
-        adj = build_adjacency(edges, num_partitions=p, chunk_size=chunk_size).persist()
-        adj.count()
+        # repr() round-trips the exact double bits into the SQL snippet —
+        # same single-SQL-execution plan-building pattern as pagerank.py.
+        katz_expr = f"{float(beta)!r}D + {float(alpha)!r}D * COALESCE(msum, 0.0D)"
+        step_exprs = [
+            "id",
+            f"{katz_expr} AS katz",
+            f"ABS(({katz_expr}) - katz) AS _delta",
+            "CAST(msum IS NOT NULL AS BIGINT) AS _msgs",
+        ]
 
-    init = verts.withColumn("katz", F.lit(float(beta)))
+        def superstep(state: DataFrame, k: int) -> StepResult:
+            msgs = (
+                adj.join(state, F.expr("src = id"))
+                .selectExpr("explode(dsts) AS id", "katz AS w")
+                .groupBy("id")
+                .agg(F.expr("SUM(w) AS msum"))
+            )
+            new = state.join(msgs, "id", "left_outer").selectExpr(*step_exprs)
+            return StepResult(state=new, messages=msgs)
 
-    # repr() round-trips the exact double bits into the SQL snippet —
-    # same single-SQL-execution plan-building pattern as pagerank.py.
-    katz_expr = f"{float(beta)!r}D + {float(alpha)!r}D * COALESCE(msum, 0.0D)"
-    step_exprs = [
-        "id",
-        f"{katz_expr} AS katz",
-        f"ABS(({katz_expr}) - katz) AS _delta",
-        "CAST(msum IS NOT NULL AS BIGINT) AS _msgs",
-    ]
+        if fixed_updates is not None:
+            max_iter = fixed_updates
+            def done(stats):
+                return False
+        else:
+            max_iter = max_supersteps
+            def done(stats):
+                return stats.delta is not None and stats.delta <= tol
 
-    def superstep(state: DataFrame, k: int) -> StepResult:
-        msgs = (
-            adj.join(state, F.expr("src = id"))
-            .selectExpr("explode(dsts) AS id", "katz AS w")
-            .groupBy("id")
-            .agg(F.expr("SUM(w) AS msum"))
+        result = iterate(
+            init,
+            superstep,
+            converged=done,
+            max_supersteps=max_iter,
+            ckpt=ckpt,
+            resume=resume,
+            num_partitions=p,
         )
-        new = state.join(msgs, "id", "left_outer").selectExpr(*step_exprs)
-        return StepResult(state=new, messages=msgs)
-
-    if fixed_updates is not None:
-        max_iter = fixed_updates
-        def done(stats):
-            return False
-    else:
-        max_iter = max_supersteps
-        def done(stats):
-            return stats.delta is not None and stats.delta <= tol
-
-    result = iterate(
-        init,
-        superstep,
-        converged=done,
-        max_supersteps=max_iter,
-        ckpt=ckpt,
-        resume=resume,
-        track_messages=track_messages,
-        num_partitions=p,
-    )
-    adj.unpersist()
     return result.state.select("id", "katz"), result

@@ -56,7 +56,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointManager
-from ..graph import choose_partitions, vertices_from_edges
+from ..graph import loop_vertices
 from ..partitioning import symmetrize
 from ..phash import md5_digits_spark_sql as _md5_digits_spark_sql
 from ..phash import md5_int_sql as _md5_int_sql
@@ -113,9 +113,9 @@ def maximal_matching(
         release_local_checkpoint,
     )
 
-    p = choose_partitions(edges, lambda: edges.count(), num_partitions)
-    if vertices is None:
-        vertices = vertices_from_edges(edges)
+    p, verts = loop_vertices(
+        edges, vertices, num_partitions, symmetrize_edges=True
+    )
 
     # canonical u < v live-edge universe (one row per undirected edge);
     # read exactly once (the round-1 derivation, or once more on a
@@ -124,9 +124,7 @@ def maximal_matching(
         F.col("src").alias("u"), F.col("dst").alias("v")
     )
 
-    init = vertices.select("id").withColumn(
-        "mate", F.lit(UNMATCHED).cast("long")
-    ).repartition(p, "id")
+    init = verts.withColumn("mate", F.lit(UNMATCHED).cast("long"))
 
     # carried live-edge frames: "cur" is this round's frame (a lazy
     # localCheckpoint — it materializes inside the round's single state

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointManager
-from ..graph import choose_partitions, vertices_from_edges
+from ..graph import loop_vertices
 from ..partitioning import symmetrize
 from ..phash import md5_digits_spark_sql as _md5_digits_spark_sql
 from ..phash import md5_int_sql as _md5_int_sql
@@ -84,17 +84,15 @@ def maximal_independent_set(
     Deterministic in (graph, seed); both coin modes yield a valid MIS
     but generally DIFFERENT sets. Isolated vertices always enter.
     """
-    p = choose_partitions(edges, lambda: edges.count(), num_partitions)
-    if vertices is None:
-        vertices = vertices_from_edges(edges)
+    p, verts = loop_vertices(
+        edges, vertices, num_partitions, symmetrize_edges=True
+    )
 
     with iteration_conf(edges.sparkSession, p):
         sym = symmetrize(edges).repartition(p, "src").persist()
         sym.count()
 
-    init = vertices.select("id").withColumn(
-        "status", F.lit(LIVE).cast("int")
-    ).repartition(p, "id")
+    init = verts.withColumn("status", F.lit(LIVE).cast("int"))
 
     def superstep(state: DataFrame, k: int) -> StepResult:
         live = state.filter(F.col("status") == LIVE).select("id")
@@ -159,7 +157,6 @@ def maximal_independent_set(
         max_supersteps=max_supersteps,
         ckpt=ckpt,
         resume=resume,
-        track_messages=True,
         num_partitions=p,
     )
     sym.unpersist()

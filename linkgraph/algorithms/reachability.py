@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointManager
-from ..graph import choose_partitions, vertices_from_edges
+from ..graph import loop_vertices
 from ..partitioning import symmetrize
 from ..superstep import LoopResult, StepResult, iterate, iteration_conf
 
@@ -43,18 +43,13 @@ def reachability(
     max_supersteps: int = 200,
     ckpt: CheckpointManager | None = None,
     resume: bool = True,
-    track_messages: bool = True,
 ) -> tuple[DataFrame, bool, LoopResult]:
     """Returns (DF(id, state), reachable, LoopResult).
 
     ``state``: 0 unmarked, 1 reached-from-source, 2 reached-from-dest,
     3 both (the searches met through this vertex).
     """
-    scale = 2 if symmetrize_edges else 1
-    p = choose_partitions(edges, lambda: scale * edges.count(), num_partitions)
-    if vertices is None:
-        vertices = vertices_from_edges(edges)
-    verts = vertices.select("id").repartition(p, "id")
+    p, verts = loop_vertices(edges, vertices, num_partitions, symmetrize_edges)
 
     e = symmetrize(edges) if symmetrize_edges else edges.select("src", "dst")
     with iteration_conf(edges.sparkSession, p):
@@ -125,7 +120,6 @@ def reachability(
         max_supersteps=max_supersteps,
         ckpt=ckpt,
         resume=resume,
-        track_messages=track_messages,
         num_partitions=p,
     )
     adj.unpersist()

@@ -46,7 +46,6 @@ def salsa_scores(
     edges: DataFrame,
     vertices: DataFrame | None = None,
     num_partitions: int | None = None,
-    chunk_size: int = 4096,
     max_supersteps: int = 200,
 ) -> tuple[DataFrame, LoopResult]:
     """Returns (DF(id, hub, authority), LoopResult of the CC phase).
@@ -64,7 +63,6 @@ def salsa_scores(
     comp, res = connected_components(
         dc,
         num_partitions=num_partitions,
-        chunk_size=chunk_size,
         max_supersteps=max_supersteps,
     )
 

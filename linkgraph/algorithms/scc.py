@@ -62,7 +62,6 @@ def strongly_connected_components(
     edges: DataFrame,
     vertices: DataFrame | None = None,
     num_partitions: int | None = None,
-    chunk_size: int = 4096,
     max_rounds: int = 40,
     max_supersteps: int = 200,
 ) -> tuple[DataFrame, LoopResult]:
@@ -98,11 +97,10 @@ def strongly_connected_components(
         )
 
         for _round in range(1, max_rounds + 1):
-            adj_out = build_adjacency(e, num_partitions=p, chunk_size=chunk_size)
+            adj_out = build_adjacency(e, num_partitions=p)
             adj_in = build_adjacency(
                 e.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
                 num_partitions=p,
-                chunk_size=chunk_size,
             )
             adj_out.persist().count()
             adj_in.persist().count()

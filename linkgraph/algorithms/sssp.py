@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointManager
-from ..graph import choose_partitions, vertices_from_edges
+from ..graph import loop_vertices
 from ..superstep import LoopResult, StepResult, iterate, iteration_conf
 
 _INF = float("inf")
@@ -32,13 +32,9 @@ def shortest_paths(
     max_supersteps: int = 200,
     ckpt: CheckpointManager | None = None,
     resume: bool = True,
-    track_messages: bool = True,
 ) -> tuple[DataFrame, LoopResult]:
     """Returns (DF(id, distance), LoopResult); distance NULL if unreachable."""
-    p = choose_partitions(edges, lambda: edges.count(), num_partitions)
-    if vertices is None:
-        vertices = vertices_from_edges(edges)
-    verts = vertices.select("id").repartition(p, "id")
+    p, verts = loop_vertices(edges, vertices, num_partitions)
 
     w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
     # weighted adjacency rows (src, dst, w); kept row-per-edge (the
@@ -87,7 +83,6 @@ def shortest_paths(
         max_supersteps=max_supersteps,
         ckpt=ckpt,
         resume=resume,
-        track_messages=track_messages,
         num_partitions=p,
     )
     wedges.unpersist()

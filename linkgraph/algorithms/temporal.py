@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointManager
-from ..graph import choose_partitions, vertices_from_edges
+from ..graph import loop_vertices
 from ..superstep import LoopResult, StepResult, iterate, iteration_conf
 
 _INF = (1 << 62) - 1  # integer +inf sentinel; timestamps must be < this
@@ -61,7 +61,6 @@ def temporal_earliest_arrival(
     max_supersteps: int = 200,
     ckpt: CheckpointManager | None = None,
     resume: bool = True,
-    track_messages: bool = True,
 ) -> tuple[DataFrame, LoopResult]:
     """Earliest time-respecting arrival from ``source``.
 
@@ -74,10 +73,7 @@ def temporal_earliest_arrival(
     (DF(id, arrival BIGINT), LoopResult); arrival NULL if no
     time-respecting path exists. The source reports ``start_time``.
     """
-    p = choose_partitions(tedges, lambda: tedges.count(), num_partitions)
-    if vertices is None:
-        vertices = vertices_from_edges(tedges)
-    verts = vertices.select("id").repartition(p, "id")
+    p, verts = loop_vertices(tedges, vertices, num_partitions)
 
     with iteration_conf(tedges.sparkSession, p):
         te = (
@@ -133,7 +129,6 @@ def temporal_earliest_arrival(
         max_supersteps=max_supersteps,
         ckpt=ckpt,
         resume=resume,
-        track_messages=track_messages,
         num_partitions=p,
     )
     te.unpersist()
@@ -154,7 +149,6 @@ def temporal_latest_departure(
     max_supersteps: int = 200,
     ckpt: CheckpointManager | None = None,
     resume: bool = True,
-    track_messages: bool = True,
 ) -> tuple[DataFrame, LoopResult]:
     """Latest departure time reaching ``target`` — the reverse twin of
     :func:`temporal_earliest_arrival`: dep(v) = the latest t at which v
@@ -172,10 +166,7 @@ def temporal_latest_departure(
     no time-respecting path exists, and NULL for ``target`` itself
     when ``deadline`` is None (it does not depart).
     """
-    p = choose_partitions(tedges, lambda: tedges.count(), num_partitions)
-    if vertices is None:
-        vertices = vertices_from_edges(tedges)
-    verts = vertices.select("id").repartition(p, "id")
+    p, verts = loop_vertices(tedges, vertices, num_partitions)
     cap = _INF if deadline is None else int(deadline)
 
     with iteration_conf(tedges.sparkSession, p):
@@ -239,7 +230,6 @@ def temporal_latest_departure(
         max_supersteps=max_supersteps,
         ckpt=ckpt,
         resume=resume,
-        track_messages=track_messages,
         num_partitions=p,
     )
     te.unpersist()

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointManager
-from ..graph import choose_partitions, vertices_from_edges
+from ..graph import loop_vertices
 
 UNPEELED = -1
 
@@ -52,17 +52,13 @@ def dependency_levels(
     permanently cyclic, matching the dependency reading."""
     from ..superstep import LoopResult, StepResult, iterate, iteration_conf
 
-    p = choose_partitions(edges, lambda: edges.count(), num_partitions)
-    if vertices is None:
-        vertices = vertices_from_edges(edges)
+    p, verts = loop_vertices(edges, vertices, num_partitions)
 
     with iteration_conf(edges.sparkSession, p):
         de = edges.select("src", "dst").distinct().repartition(p, "dst").persist()
         de.count()
 
-    init = vertices.select("id").withColumn(
-        "level", F.lit(UNPEELED).cast("long")
-    ).repartition(p, "id")
+    init = verts.withColumn("level", F.lit(UNPEELED).cast("long"))
 
     def superstep(state: DataFrame, k: int) -> StepResult:
         live = state.filter(F.col("level") == UNPEELED).select("id")

@@ -50,7 +50,7 @@ def symmetrize(edges: DataFrame) -> DataFrame:
 def build_adjacency(
     edges: DataFrame,
     num_partitions: int | None = None,
-    chunk_size: int = DEFAULT_CHUNK_SIZE,
+    chunk_size: int | None = None,
 ) -> DataFrame:
     """edges(src,dst) -> salted CSR-style adjacency.
 
@@ -59,7 +59,12 @@ def build_adjacency(
     out-degree (not the chunk length) so rank contributions stay correct
     when a hub is split across chunks — the salting must not change
     PageRank mass (SURVEY.md SS9 "hard parts").
+
+    ``chunk_size`` defaults to :data:`DEFAULT_CHUNK_SIZE`, read at call
+    time.
     """
+    if chunk_size is None:
+        chunk_size = DEFAULT_CHUNK_SIZE
     deg = out_degrees(edges)
     salted = (
         edges.join(deg, "src")

@@ -222,6 +222,8 @@ def wav_decode(payload: bytes) -> tuple[np.ndarray, int]:
         (length,) = struct.unpack("<I", payload[pos + 4 : pos + 8])
         body = payload[pos + 8 : pos + 8 + length]
         if tag == b"fmt ":
+            if len(body) < 16:
+                raise ValueError(f"WAV fmt chunk too short ({len(body)} bytes)")
             fmt = struct.unpack("<HHIIHH", body[:16])
         elif tag == b"data":
             data = body
@@ -233,6 +235,8 @@ def wav_decode(payload: bytes) -> tuple[np.ndarray, int]:
         raise ValueError(f"unsupported WAV format {audio_format} (PCM only)")
     if bits != 16:
         raise ValueError(f"unsupported WAV bit depth {bits} (16 only)")
+    if ch == 0:
+        raise ValueError("WAV fmt declares zero channels")
     if len(data) % (2 * ch):
         raise ValueError("WAV data length not a whole number of frames")
     s = np.frombuffer(data, dtype="<i2").astype(np.int16).reshape(-1, ch)
@@ -372,9 +376,18 @@ def _mp4_find(buf: bytes, start: int, end: int, tag: bytes):
     return None
 
 
-def _mp4_fullbox(buf: bytes, body: int) -> tuple[int, int]:
-    """(version, first-field offset) of a full box body."""
-    return buf[body], body + 4
+def _mp4_fullbox(
+    buf: bytes, box: tuple[int, int], tag: bytes, need: tuple[int, int]
+) -> tuple[int, int]:
+    """(version, first-field offset) of full box ``box`` = (body_start,
+    body_end). ``need`` is the byte length of the fields read after the
+    version/flags word for version 0 and version 1; a shorter body is a
+    ValueError, not a struct.error from the field unpacks."""
+    body, end = box
+    version = buf[body] if end - body >= 4 else None
+    if version is None or end - body < 4 + need[version == 1]:
+        raise ValueError(f"ISO-BMFF: {tag.decode('latin-1')} box body too short")
+    return version, body + 4
 
 
 def mp4_metadata(payload: bytes) -> dict:
@@ -394,7 +407,8 @@ def mp4_metadata(payload: bytes) -> dict:
     mvhd = _mp4_find(payload, mb, me, b"mvhd")
     if mvhd is None:
         raise ValueError("ISO-BMFF: no mvhd box")
-    v, p = _mp4_fullbox(payload, mvhd[0])
+    # creation, modification, timescale, duration
+    v, p = _mp4_fullbox(payload, mvhd, b"mvhd", (16, 28))
     if v == 1:
         timescale, duration = struct.unpack(">IQ", payload[p + 16 : p + 28])
     else:
@@ -410,7 +424,9 @@ def mp4_metadata(payload: bytes) -> dict:
         md = _mp4_find(payload, b, e, b"mdia")
         if tk is None or md is None:
             raise ValueError("ISO-BMFF: trak missing tkhd or mdia")
-        v, p = _mp4_fullbox(payload, tk[0])
+        # up to track_id/duration, then reserved, layer..volume, matrix,
+        # width and height
+        v, p = _mp4_fullbox(payload, tk, b"tkhd", (20 + 60, 32 + 60))
         if v == 1:
             track_id = struct.unpack(">I", payload[p + 16 : p + 20])[0]
             tdur = struct.unpack(">Q", payload[p + 24 : p + 32])[0]
@@ -425,6 +441,8 @@ def mp4_metadata(payload: bytes) -> dict:
         hdlr = _mp4_find(payload, md[0], md[1], b"hdlr")
         if mdhd is None or hdlr is None:
             raise ValueError("ISO-BMFF: mdia missing mdhd or hdlr")
+        if hdlr[1] - hdlr[0] < 12:
+            raise ValueError("ISO-BMFF: hdlr box body too short")
         handler = payload[hdlr[0] + 8 : hdlr[0] + 12].decode("latin-1")
         codec = None
         minf = _mp4_find(payload, md[0], md[1], b"minf")
@@ -433,9 +451,11 @@ def mp4_metadata(payload: bytes) -> dict:
             if stbl is not None:
                 stsd = _mp4_find(payload, stbl[0], stbl[1], b"stsd")
                 if stsd is not None:
-                    _, sp = _mp4_fullbox(payload, stsd[0])
+                    _, sp = _mp4_fullbox(payload, stsd, b"stsd", (4, 4))
                     (n_entries,) = struct.unpack(">I", payload[sp : sp + 4])
                     if n_entries >= 1:
+                        if stsd[1] - sp < 12:
+                            raise ValueError("ISO-BMFF: stsd box body too short")
                         codec = payload[sp + 8 : sp + 12].decode("latin-1")
         tracks.append(
             {

@@ -78,10 +78,6 @@ def iteration_conf(spark, num_partitions: int | None = None):
         spark.conf.set("spark.sql.shuffle.partitions", before_sp)
 
 
-# Backwards-compatible alias (adjacency builds predating iteration_conf).
-aqe_disabled = iteration_conf
-
-
 @dataclass
 class StepResult:
     state: DataFrame                   # new vertex state (may carry _delta/_changed/_msgs)
@@ -193,7 +189,6 @@ def iterate(
     max_supersteps: int = 100,
     ckpt: CheckpointManager | None = None,
     resume: bool = True,
-    track_messages: bool = True,
     storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
     num_partitions: int | None = None,
     global_aggs: dict[str, "F.Column"] | None = None,
@@ -206,15 +201,15 @@ def iterate(
     already holds committed supersteps (and ``resume``), iteration
     restarts from the latest snapshot instead of superstep 1.
 
-    Message metrics: when the new state carries a transient ``_msgs``
-    column (per-vertex received-message count), its sum rides the same
-    materialization job as delta/changed — the default-config superstep
-    runs exactly ONE SQL execution (one pass over the data; asserted in
-    tests/test_superstep_jobs.py). The partition-skew histogram needs a
-    grouped pass over the message frame, so it is *sampled*: computed
-    only every ``skew_sample_every``-th superstep (0 disables). A
-    superstep that returns ``messages`` without ``_msgs`` falls back to
-    the legacy extra count job.
+    Message metrics: the message count comes only from the transient
+    ``_msgs`` state column (per-vertex received-message count); its sum
+    rides the same materialization job as delta/changed, so the
+    default-config superstep runs exactly ONE SQL execution (one pass
+    over the data; asserted in tests/test_superstep_jobs.py). A state
+    without ``_msgs`` reports no message count. ``StepResult.messages``
+    feeds only the partition-skew histogram, which needs a grouped pass
+    over the message frame and is therefore *sampled*: computed only
+    every ``skew_sample_every``-th superstep (0 disables).
     """
     history: list[SuperstepMetrics] = []
     start_k = 1
@@ -299,27 +294,17 @@ def iterate(
                     name: row[f"_ga_{name}"] for name in global_aggs
                 }
 
-            if track_messages:
-                sample_skew = (
-                    skew_sample_every > 0
-                    and res.messages is not None
-                    and k % skew_sample_every == 0
+            if "_msgs" in cols:
+                # free: the count rode the materialization job above
+                stats.messages = int(row["messages"] or 0)
+            if (
+                skew_sample_every > 0
+                and res.messages is not None
+                and k % skew_sample_every == 0
+            ):
+                stats.skew_ratio = skew_from_histogram(
+                    partition_histogram(res.messages)
                 )
-                if "_msgs" in cols:
-                    # free: the count rode the materialization job above
-                    stats.messages = int(row["messages"] or 0)
-                    if sample_skew:
-                        hist = partition_histogram(res.messages)
-                        stats.skew_ratio = skew_from_histogram(hist)
-                elif res.messages is not None:
-                    # legacy path (superstep_fn without a _msgs column):
-                    # one extra job for the count, skew still sampled
-                    msgs = res.messages.persist(storage_level)
-                    stats.messages = msgs.count()
-                    if sample_skew:
-                        hist = partition_histogram(msgs)
-                        stats.skew_ratio = skew_from_histogram(hist)
-                    msgs.unpersist()
 
             if ckpt is not None and ckpt.should_checkpoint(k):
                 committed = ckpt.save(k, new_state, stats)

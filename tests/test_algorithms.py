@@ -72,9 +72,12 @@ class TestPageRank:
         for v in exp:
             assert math.isclose(got[v], exp[v], abs_tol=1e-12)
 
-    def test_salting_preserves_ranks(self, webmap_edges):
+    def test_salting_preserves_ranks(self, webmap_edges, monkeypatch):
+        import linkgraph.partitioning
+
         base, _ = pagerank(webmap_edges, fixed_updates=5)
-        salted, _ = pagerank(webmap_edges, fixed_updates=5, chunk_size=2)
+        monkeypatch.setattr(linkgraph.partitioning, "DEFAULT_CHUNK_SIZE", 2)
+        salted, _ = pagerank(webmap_edges, fixed_updates=5)
         j = base.withColumnRenamed("rank", "r0").join(salted, "id")
         mx = j.agg(F.max(F.abs(F.col("rank") - F.col("r0")))).first()[0]
         assert mx < 1e-12

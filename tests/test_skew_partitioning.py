@@ -31,9 +31,13 @@ class TestSalting:
         adj = build_adjacency(hub_edges, chunk_size=64)
         assert adj.filter("src = 5").count() == 1
 
-    def test_pagerank_identical_with_and_without_salting(self, hub_edges):
-        a, _ = pagerank(hub_edges, fixed_updates=4, chunk_size=1 << 20)
-        b, _ = pagerank(hub_edges, fixed_updates=4, chunk_size=32)
+    def test_pagerank_identical_with_and_without_salting(self, hub_edges, monkeypatch):
+        import linkgraph.partitioning
+
+        monkeypatch.setattr(linkgraph.partitioning, "DEFAULT_CHUNK_SIZE", 1 << 20)
+        a, _ = pagerank(hub_edges, fixed_updates=4)
+        monkeypatch.setattr(linkgraph.partitioning, "DEFAULT_CHUNK_SIZE", 32)
+        b, _ = pagerank(hub_edges, fixed_updates=4)
         j = a.withColumnRenamed("rank", "ra").join(b, "id")
         mx = j.agg(F.max(F.abs(F.col("rank") - F.col("ra")))).first()[0]
         assert mx < 1e-12
